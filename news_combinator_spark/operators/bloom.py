@@ -91,25 +91,6 @@ def optimal_params(expected_n: int, fp_rate: float = 1e-6) -> tuple[int, int]:
 # Sharded bloom: the 10^10-scale seen-set representation
 # ---------------------------------------------------------------------------
 
-# A/B toggle: when True, the per-round or_delta/insert_delta fold is a
-# LAZY localCheckpoint — the fold computes inside the next round's
-# probe job instead of as its own driver barrier, and the final
-# round's fold (whose result is never probed) is never computed at
-# all. Lineage is still truncated at first materialization, and the
-# fold's inputs are themselves eagerly checkpointed frames, so the
-# recompute window is one shard-keyed exchange. Module flag, not API,
-# so the effect is measurable inside one process.
-#
-# MEASURED (interleaved E/L/L/E/L/E bench_crawl cells, one JVM,
-# sf0.1 local[32], 254,868 URLs fetched, identical output hashes):
-# lazy drops exactly the 2 never-probed final folds (61 -> 59 jobs)
-# but min-basis wall is a wash — eager 14.25s vs lazy 15.10s — the
-# fold work just moves inside the probe job. Default stays EAGER:
-# same speed, and a cuckoo-overflow error surfaces at the fold call
-# that caused it instead of one round later inside a probe.
-_LAZY_DELTA_FOLD = False
-
-
 def _shard_col(col: str, n_shards: int):
     """JVM-side shard assignment; pmod keeps negatives non-negative."""
     return F.pmod(F.xxhash64(F.col(col)), F.lit(n_shards)).cast("int")
@@ -199,7 +180,7 @@ class ShardedBloom:
         merged = _fold_mixed(
             keys.unionByName(existing), self.n_shards, self.m_per_shard,
             self.k,
-        ).localCheckpoint(eager=not _LAZY_DELTA_FOLD)
+        ).localCheckpoint()
         return ShardedBloom(merged, self.n_shards, self.m_per_shard, self.k)
 
     def max_shard_bytes(self) -> int:

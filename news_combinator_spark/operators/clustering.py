@@ -301,10 +301,13 @@ def candidate_pairs(
     # one bus this box has is the resource added cores don't bring).
     # Here the banded frame takes a single hash-partitioned exchange
     # into an object-hash aggregate that collects each bucket's
-    # members (bounded by max_bucket), and the a<b pairs are expanded
-    # INLINE by JVM array lambdas over the doc-id-sorted member list
-    # — no sort anywhere, no second pass over the banded frame, and
-    # the s^2/2 blow-up stays bounded per bucket exactly as before.
+    # members, and the a<b pairs are expanded INLINE by JVM array
+    # lambdas over the doc-id-sorted member list — no sort anywhere,
+    # no second pass over the banded frame. The max_bucket guard is a
+    # filter AFTER collect_list: a boilerplate bucket is collected in
+    # full (its member list is O(bucket) memory in one task) and only
+    # then dropped, so what stays bounded is the s^2/2 pair expansion,
+    # not the collection.
     # Identical candidate SET: same bucket membership, same
     # <=max_bucket guard, same a<b + size-ratio conditions, same
     # final dropDuplicates.

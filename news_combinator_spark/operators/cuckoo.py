@@ -236,13 +236,12 @@ class ShardedCuckoo:
                 delta.sparkSession.sparkContext.defaultParallelism,
             ),
         )
-        from .bloom import _LAZY_DELTA_FOLD
-
         merged = (
             keys.unionByName(existing)
             .repartition(n_part, "shard")
             .mapInPandas(fold, schema="shard int, slots binary")
-            .localCheckpoint(eager=not _LAZY_DELTA_FOLD)
+            # eager: a table overflow raises at the fold that caused it
+            .localCheckpoint()
         )
         return ShardedCuckoo(merged, self.n_shards, self.n_buckets)
 

@@ -7,10 +7,15 @@ north_rule:
 
 per round:  frontier --(politeness window per host)--> scheduled
             scheduled --(fetch = html lookup / pandas-UDF HTTP)--> fetched
-            fetched --(link extraction kernel)--> candidates
-            candidates --(canonicalize, allowed-hosts, robots)--> eligible
+            fetched --(extract + canonicalize links, ONE Arrow pass)--> candidates
+            candidates --(allowed-hosts, resolve, robots)--> eligible
             eligible --(bloom prefilter + exact anti-join vs seen)--> new
             frontier' = deferred ∪ new ; seen' = seen ∪ new
+
+Every step runs once per round: the probed frame is persisted for the
+round (its fresh and maybe-seen halves both read it), and the
+canonical link comes out of the extraction UDF, so the JVM host filter
+above the explode never re-evaluates Python.
 
 Determinism contract (SURVEY.md §7 risk 1): total crawl order is
 (round, priority, host, url) — never partition iteration order. The
@@ -43,8 +48,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.extract import links_udf
-from ..functions.urls import canonicalize_udf
+from ..functions.extract import canonical_links_udf
 from .bloom import ShardedBloom, build_sharded_bloom
 from .ranking import partitioned_global_rank
 
@@ -101,13 +105,6 @@ class CrawlResult:
         )
 
 
-# A/B toggle for the per-round checkpoint shape (fold = one combined
-# materialization; unfold = the pre-fold new+frontier pair). Module
-# flag, not API: exists so the fold's effect is measurable inside one
-# process (this box forbids cross-process timing comparisons).
-_FOLD_ROUND_CHECKPOINTS = True
-
-
 def schedule_per_host(
     frontier: DataFrame,
     budgets: DataFrame,
@@ -153,13 +150,15 @@ def schedule_per_host(
             "salt", F.pmod(F.xxhash64("url"), F.lit(salt_buckets))
         )
         w_local = Window.partitionBy("host", "salt").orderBy(*order)
-        survivors = (
-            salted.withColumn("lrn", F.row_number().over(w_local))
-            .filter(F.col("lrn") <= F.col("budget"))
-            .drop("lrn", "salt")
+        # one local window splits the frame: a row past its (host,
+        # salt) budget can never be among the host's top-budget, so it
+        # is deferred without reaching the exact per-host window
+        ranked = salted.withColumn("lrn", F.row_number().over(w_local))
+        survivors = ranked.filter(F.col("lrn") <= F.col("budget")).drop(
+            "lrn", "salt"
         )
-        rest = salted.join(survivors.select("url"), "url", "left_anti").drop(
-            "salt"
+        rest = ranked.filter(F.col("lrn") > F.col("budget")).drop(
+            "lrn", "salt"
         )
         w = Window.partitionBy("host").orderBy(*order)
         top = survivors.withColumn("rn", F.row_number().over(w)).withColumn(
@@ -601,6 +600,10 @@ def crawl(
         # base snapshot: seeds are seen-delta 0, nothing fetched yet
         save_checkpoint(frontier, init_seen, checkpoint_dir, 0, n_fetched=0)
 
+    # every round's schedule broadcasts budgets; cut the caller's
+    # lineage (often a driver-side local collection) once, not per round
+    budgets = budgets.localCheckpoint()
+
     fetched_rounds: list[DataFrame] = []
     lineage: list[RoundMetrics] = []
     host_lineage_rounds: list[DataFrame] = []
@@ -608,6 +611,7 @@ def crawl(
 
     for r in range(start_round, rounds):
         metrics = RoundMetrics(round=r)
+        probed = None
         sched = schedule_per_host(
             frontier, budgets, salt_buckets,
             wait_col="wait" if aging_every > 0 else None,
@@ -676,11 +680,12 @@ def crawl(
             fetched_total += metrics.scheduled
 
         if r < rounds - 1:
-            links = fetched.select(
-                F.explode(links_udf(F.col("html"))).alias("raw_url")
-            )
-            cand = links.select(
-                canonicalize_udf(F.col("raw_url")).alias("url")
+            # extraction and canonicalization fused in one Arrow UDF,
+            # exploded BEFORE the JVM host filter: a filter on a
+            # projected UDF output is pushed below the projection and
+            # would evaluate the UDF a second time
+            cand = fetched.select(
+                F.explode(canonical_links_udf(F.col("html"))).alias("url")
             )
             if allowed_host_suffix:
                 cand = cand.filter(
@@ -713,9 +718,13 @@ def crawl(
                 metrics.robots_blocked = n_cand - after_robots
 
             if bloom is not None:
-                flagged = bloom.probe(cand, "url", out_col="maybe")
-                fresh = flagged.filter("NOT maybe").drop("maybe")
-                suspect = flagged.filter("maybe").drop("maybe")
+                # persisted for the round: the definitely-new and
+                # maybe-seen halves both read it, and without the cache
+                # each half re-runs fetch -> extract -> resolve -> probe
+                # (exchange reuse misses the self-join's re-aliased copy)
+                probed = bloom.probe(cand, "url", out_col="maybe").persist()
+                fresh = probed.filter("NOT maybe").drop("maybe")
+                suspect = probed.filter("maybe").drop("maybe")
                 new = fresh.unionByName(
                     suspect.join(seen_df(), "url", "left_anti")
                 )
@@ -729,44 +738,33 @@ def crawl(
             # sandbox scale the sequential driver barriers ARE the
             # crawl's critical path (BENCH/BASELINE.md), and on a real
             # cluster it's one fewer job submission per round.
-            if _FOLD_ROUND_CHECKPOINTS:
-                combined = (
-                    deferred.select(*fcols)
-                    .withColumn("is_new", F.lit(False))
-                    .unionByName(
-                        _with_wait(new.select(*FRONTIER_COLS)).withColumn(
-                            "is_new", F.lit(True)
-                        )
+            combined = (
+                deferred.select(*fcols)
+                .withColumn("is_new", F.lit(False))
+                .unionByName(
+                    _with_wait(new.select(*FRONTIER_COLS)).withColumn(
+                        "is_new", F.lit(True)
                     )
                 )
-                if checkpoint_dir is not None:
-                    # Fold the round snapshot INTO the round's single
-                    # materialization (VERDICT r4 #4): the flagged
-                    # union is written ONCE as the checkpoint parquet
-                    # (frontier = all rows, seen delta = is_new rows —
-                    # same O(new)+O(frontier) bytes the two separate
-                    # files held) and read back as the next round's
-                    # lineage cut. vs the old shape this deletes two
-                    # jobs per round (localCheckpoint + second parquet
-                    # write), and the durable file is also the safer
-                    # cut — localCheckpoint state dies with an
-                    # executor, a checkpoint parquet does not.
-                    cpath = os.path.join(
-                        checkpoint_dir, f"round={r + 1}", "combined"
-                    )
-                    combined.write.mode("overwrite").parquet(cpath)
-                    combined = spark.read.parquet(cpath)
-                else:
-                    combined = combined.localCheckpoint()
-                frontier = combined.drop("is_new")
-                new = combined.filter("is_new").drop("is_new")
-            else:  # pre-fold shape, kept for A/B measurement
-                new = _with_wait(
-                    new.select(*FRONTIER_COLS)
-                ).localCheckpoint()
-                frontier = deferred.select(*fcols).unionByName(
-                    new
-                ).localCheckpoint()
+            )
+            if checkpoint_dir is not None:
+                # Fold the round snapshot INTO the round's single
+                # materialization: the flagged union is written ONCE
+                # as the checkpoint parquet (frontier = all rows, seen
+                # delta = is_new rows — same O(new)+O(frontier) bytes
+                # the two separate files held) and read back as the
+                # next round's lineage cut. The durable file is also
+                # the safer cut — localCheckpoint state dies with an
+                # executor, a checkpoint parquet does not.
+                cpath = os.path.join(
+                    checkpoint_dir, f"round={r + 1}", "combined"
+                )
+                combined.write.mode("overwrite").parquet(cpath)
+                combined = spark.read.parquet(cpath)
+            else:
+                combined = combined.localCheckpoint()
+            frontier = combined.drop("is_new")
+            new = combined.filter("is_new").drop("is_new")
             if collect_lineage:
                 metrics.enqueued = new.count()
                 metrics.deduped = metrics.discovered - metrics.robots_blocked - metrics.enqueued
@@ -783,21 +781,12 @@ def crawl(
                 if fetch_obs is not None:
                     # materialized by the combined write above
                     fetched_total += int(fetch_obs.get["n"])
-                if _FOLD_ROUND_CHECKPOINTS:
-                    # data already on disk via the combined write;
-                    # only the meta record remains
-                    _write_checkpoint_meta(
-                        checkpoint_dir, r + 1, fetched_total
-                    )
-                else:
-                    # O(new) per round: only this round's seen DELTA
-                    # is written; load_checkpoint unions deltas
-                    # 0..round
-                    save_checkpoint(
-                        frontier, new.select("url"), checkpoint_dir,
-                        r + 1, n_fetched=fetched_total,
-                    )
+                # data already on disk via the combined write; only
+                # the meta record remains
+                _write_checkpoint_meta(checkpoint_dir, r + 1, fetched_total)
         sched.unpersist()
+        if probed is not None:
+            probed.unpersist()
         lineage.append(metrics)
 
     all_fetched = fetched_rounds[0]

@@ -273,9 +273,12 @@ class SnapshotTable:
         that are (a) older than ``older_than_ts`` (commit-time cutoff,
         the clearpic rule) and/or (b) beyond the newest ``keep_last``
         versions — but NEVER the latest snapshot, which time-travel
-        reads and resumes may still pin. Idempotent: an
-        already-removed version is skipped silently (the err 612
-        branch). Returns the versions removed."""
+        reads and resumes may still pin. A version must meet every
+        rule given; one with no recorded commit time (no
+        ``_commit_meta.json``) has no provable age, so the age rule
+        never expires it. Idempotent: an already-removed version is
+        skipped silently (the err 612 branch). Returns the versions
+        removed."""
         import shutil
 
         if keep_last is None and older_than_ts is None:
@@ -294,7 +297,7 @@ class SnapshotTable:
                 continue
             if older_than_ts is not None:
                 ts = self.commit_ts(v)
-                if ts is not None and ts >= older_than_ts:
+                if ts is None or ts >= older_than_ts:
                     continue
             shutil.rmtree(vdir)
             removed.append(v)

@@ -13,6 +13,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """48g, or half the machine's physical memory when that is less.
+    In local mode the driver heap is every executor's heap; a max heap
+    above physical memory lets the JVM grow until the OS kills it."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError):
+        return "48g"
+    return f"{min(48 * 1024, phys // 2**20 // 2)}m"
+
+
 def get_spark(
     app_name: str = "news_combinator_spark",
     cores: int | None = None,
@@ -40,7 +51,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -6,7 +6,10 @@ The kernel is the spec for byte-identical extraction
 reference's ListCombiner no-separator concat (news_func.py:1-5).
 """
 
+from pyspark.sql import functions as F
+
 from news_combinator_spark.functions.extract import (
+    canonical_links_udf,
     extract_links,
     extract_markers,
     extract_passage,
@@ -98,3 +101,50 @@ def test_match_source_reference_grammars():
     )
     assert src == ("sina", "20140301", "12345678")
     assert match_source("http://other.example/x") is None
+
+
+# links covering the canonicalizer's rules: dot segments, percent
+# encodings (unreserved decoded, hex uppercased), default ports,
+# fragments, sorted query keys, empty path, empty href
+_CANON_HTML = (
+    '<a href="HTTP://H.test:80/a/./b/../c.htm#top">1</a>'
+    '<a href="https://h.test:443/%7euser/%2fx?b=2&a=1">2</a>'
+    '<a href="http://h.test:8080/p#f">3</a>'
+    '<a href="http://h.test">4</a>'
+    '<a href="">5</a>'
+    '<a href="HTTP://H.test:80/a/./b/../c.htm#top">dup</a>'
+)
+
+
+def _canonical_links_ref(html) -> list[str]:
+    if isinstance(html, (bytes, bytearray)):
+        html = html.decode("utf-8")
+    return [canonicalize_url(u) for u in extract_links(html)]
+
+
+def test_canonical_links_udf_matches_kernel_composition(spark):
+    """The fused UDF equals canonicalize_url over extract_links, on
+    string and binary html alike; None html yields no links."""
+    docs = [_CANON_HTML, "<p>no links</p>", None,
+            '<a href="http://h.test/%41b/../c?z=1#x">a</a>']
+    str_df = spark.createDataFrame([(i, h) for i, h in enumerate(docs)],
+                                   "id int, html string")
+    bin_df = str_df.select("id", F.col("html").cast("binary").alias("html"))
+    for df in (str_df, bin_df):
+        got = {
+            r.id: list(r.links)
+            for r in df.select(
+                "id", canonical_links_udf("html").alias("links")
+            ).collect()
+        }
+        exp = {i: _canonical_links_ref(h) for i, h in enumerate(docs)}
+        assert got == exp
+    # the goldens the composition must hit
+    assert _canonical_links_ref(_CANON_HTML.encode()) == [
+        "http://h.test/a/c.htm",
+        "https://h.test/~user/%2Fx?a=1&b=2",
+        "http://h.test:8080/p",
+        "http://h.test/",
+        "",
+        "http://h.test/a/c.htm",
+    ]

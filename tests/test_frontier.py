@@ -12,6 +12,7 @@ from news_combinator_spark.datagen import (
     robots_df,
     seeds_df,
 )
+from news_combinator_spark.functions.extract import extract_links
 from news_combinator_spark.operators.frontier import (
     apply_robots,
     crawl,
@@ -663,3 +664,97 @@ def test_crawl_rfc9309_wildcards_mode(spark):
     g2 = res2.fetched.select("url", "host", "round").toPandas()
     h1b = g2[(g2.host == "h1.test") & (g2["round"] > 0)]
     assert len(h1b) >= len(h1)
+
+
+def test_salted_schedule_matches_unsalted_without_anti_join(spark):
+    """Salting is a pure pre-pass: on a hot host whose rows spread over
+    every salt and tie on priority, the salted schedule takes exactly
+    the unsalted (priority, url) top-budget, and it splits the frame
+    with one window instead of re-joining it against its survivors."""
+    rows = [
+        (f"http://hot.test/{i:03d}", "hot.test", i % 3) for i in range(60)
+    ] + [
+        (f"http://cold{i}.test/x", f"cold{i}.test", 0) for i in range(3)
+    ] + [("http://nobudget.test/a", "nobudget.test", 1),
+         ("http://nobudget.test/b", "nobudget.test", 1)]
+    frontier = spark.createDataFrame(
+        rows, "url string, host string, priority int"
+    )
+    budgets = spark.createDataFrame(
+        [("hot.test", 7)] + [(f"cold{i}.test", 2) for i in range(3)],
+        "host string, budget int",
+    )
+    cols = ["url", "host", "priority", "taken"]
+    plain = schedule_per_host(frontier, budgets).toPandas()[cols]
+    for salt in (1, 4, 16):
+        salted_df = schedule_per_host(frontier, budgets, salt_buckets=salt)
+        salted = salted_df.toPandas()[cols]
+        pd.testing.assert_frame_equal(
+            salted.sort_values("url").reset_index(drop=True),
+            plain.sort_values("url").reset_index(drop=True),
+        )
+        plan = salted_df._jdf.queryExecution().optimizedPlan().toString()
+        assert "LeftAnti" not in plan
+    taken = plain[plain.taken]
+    # priority-0 hot urls are every third index: 000, 003, ..., 018
+    assert sorted(taken[taken.host == "hot.test"].url) == [
+        f"http://hot.test/{i:03d}" for i in range(0, 21, 3)
+    ]
+    assert len(taken[taken.host == "nobudget.test"]) == 1
+
+
+def _udf_call_counts(spark, out_dir, names: set[str]) -> dict[str, int]:
+    """Sum the perf UDF profiler's call counts per 'module.py:function'."""
+    import os
+    import pstats
+
+    spark.profile.dump(str(out_dir), type="perf")
+    counts = dict.fromkeys(names, 0)
+    for f in sorted(out_dir.glob("*.pstats")):
+        for (path, _line, fn), (_cc, nc, *_) in pstats.Stats(
+            str(f)
+        ).stats.items():
+            key = f"{os.path.basename(path)}:{fn}"
+            if key in counts:
+                counts[key] += nc
+    return counts
+
+
+def test_crawl_round_runs_each_python_step_once(spark, tmp_path):
+    """A bloom-on crawl evaluates each non-final round's Python data
+    plane once: link extraction once per fetched page, canonicalization
+    once per extracted link, and the bloom probe's cogroup once per
+    shard (every one of the few shards holds seen urls from round 0 on).
+    Re-derived lazy frames would multiply these counts."""
+    n_shards = 4
+    pages = pages_from_documents(spark, SF_SMALL)
+    spark.conf.set("spark.sql.pyspark.udf.profiler", "perf")
+    spark.profile.clear()
+    try:
+        res = crawl(
+            spark, pages, seeds_df(spark, pages), budgets_df(spark),
+            robots=robots_df(spark), rounds=CRAWL_ROUNDS,
+            allowed_host_suffix=".test", use_bloom=True,
+            bloom_expected=10_000, bloom_shards=n_shards,
+            collect_lineage=False,
+        )
+        got = res.fetched.toPandas()
+        counts = _udf_call_counts(spark, tmp_path, {
+            "extract.py:extract_links", "urls.py:canonicalize_url",
+            "bloom.py:check",
+        })
+    finally:
+        spark.conf.unset("spark.sql.pyspark.udf.profiler")
+        spark.profile.clear()
+    expanded = got[got["round"] < CRAWL_ROUNDS - 1].merge(
+        pages.select("url", "html").toPandas(), on="url"
+    )
+    n_links = sum(
+        len(extract_links(bytes(h).decode("utf-8"))) for h in expanded.html
+    )
+    assert n_links > 0
+    assert counts == {
+        "extract.py:extract_links": len(expanded),
+        "urls.py:canonicalize_url": n_links,
+        "bloom.py:check": (CRAWL_ROUNDS - 1) * n_shards,
+    }

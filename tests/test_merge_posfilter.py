@@ -441,3 +441,25 @@ def test_snapshot_expiry_gc(spark, tmp_path):
         t.expire_snapshots(keep_last=0)
     with _pytest.raises(ValueError):
         t.expire_snapshots()
+
+
+def test_snapshot_expiry_keeps_versions_of_unknown_age(spark, tmp_path):
+    """A version without a commit-time record has no provable age: the
+    age cutoff never expires it, alone or combined with keep_last,
+    while keep_last alone still does."""
+    import os
+
+    from news_combinator_spark.operators.merge import SnapshotTable
+
+    t = SnapshotTable(spark, str(tmp_path / "tbl"))
+    for i, ts in enumerate([1000.0, 2000.0, 3000.0]):
+        t.commit(
+            spark.createDataFrame([(f"u{i}",)], "url string"),
+            commit_ts=ts,
+        )
+    os.remove(os.path.join(t.path, "v=1", "_commit_meta.json"))
+    assert t.commit_ts(1) is None
+    assert t.expire_snapshots(older_than_ts=2500.0) == [2]
+    assert t.expire_snapshots(keep_last=1, older_than_ts=9e9) == []
+    assert {r.url for r in t.read(1).collect()} == {"u0"}
+    assert t.expire_snapshots(keep_last=1) == [1]
